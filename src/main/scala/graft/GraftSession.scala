@@ -47,11 +47,10 @@ object GraftSession {
     // format 3 keeps ONE RocksDB store per partition (virtual column
     // families) instead of four. Results are provider- and
     // format-independent (spec-asserted, oracle-checked).
-    // GRAFT_STATE_STORE=hdfs restores the heap-backed engine default for
-    // A/B (the format/changelog knobs are RocksDB-only and flip with it);
-    // =rocksdb stays accepted from the r13 opt-in contract.
-    val useRocksDb =
-      !sys.env.get("GRAFT_STATE_STORE").exists(v => v == "hdfs" || v == "heap")
+    // GRAFT_STATE_STORE=hdfs (or heap) restores the heap-backed engine
+    // default for A/B (the format/changelog knobs are RocksDB-only and
+    // flip with it); =rocksdb stays accepted from the r13 opt-in contract.
+    val useRocksDb = stateStoreIsRocksDb(sys.env.get("GRAFT_STATE_STORE"))
     val withState =
       if (useRocksDb)
         builder
@@ -65,4 +64,15 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The GRAFT_STATE_STORE value → whether the session uses RocksDB: unset
+    * or `rocksdb` → true, `hdfs`/`heap` → false, case-insensitively. Any
+    * other value throws rather than silently picking a store. */
+  private[graft] def stateStoreIsRocksDb(value: Option[String]): Boolean =
+    value.map(_.toLowerCase(java.util.Locale.ROOT)) match {
+      case None | Some("rocksdb") => true
+      case Some("hdfs" | "heap") => false
+      case Some(other) => throw new IllegalArgumentException(
+        s"GRAFT_STATE_STORE=$other: expected rocksdb, hdfs or heap")
+    }
 }

@@ -47,6 +47,9 @@ object Infer {
     * output as `<outputColumn>_seed` (our local models are deterministic;
     * a sampling backend would consume it in generate()).
     *
+    * A model that declares [[Model.outputSchema]] has it attached to
+    * `outputColumn` as column metadata (see [[Results.OutputSchemaKey]]).
+    *
     * Returns df + `outputColumn`.
     */
   def infer(
@@ -61,7 +64,9 @@ object Infer {
     var prompt = renderPrompt(df, column)
     if (truncateRows) prompt = truncateTokens(prompt, model.contextWindow)
     systemPrompt.foreach(sp => prompt = concat(lit(sp + "\n\n"), prompt))
-    var out = df.withColumn(outputColumn, model.generate(prompt))
+    val output = model.generate(prompt)
+    var out = df.withColumn(outputColumn, model.outputSchema.fold(output)(s =>
+      output.as(outputColumn, Results.outputSchemaMetadata(s))))
     model.confidence(prompt).foreach(c => out = out.withColumn("confidence_score", c))
     if (randomSeedPerInput) out = out.withColumn(s"${outputColumn}_seed", perInputSeed(prompt))
     out

@@ -1,7 +1,10 @@
 package graft.llm
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
@@ -30,8 +33,10 @@ object Jobs {
     * cache — the local analog of the reference's streamed row counts. */
   case class JobProgress(jobId: String, tasksDone: Long, tasksTotal: Long, rowsWritten: Long)
 
-  /** priority mirrors the reference's job_priority (0 = prototyping). */
-  case class Job(id: String, name: Option[String], resultPath: String,
+  /** schema is the cached result's schema as a parquet read returns it:
+    * the written frame's, metadata kept, every field nullable. priority
+    * mirrors the reference's job_priority (0 = prototyping). */
+  case class Job(id: String, name: Option[String], resultPath: String, schema: StructType,
       var status: Status, priority: Int = 0, var failureReason: Option[String] = None)
 
   private val counter = new AtomicLong(0)
@@ -60,7 +65,8 @@ object Jobs {
       onProgress: Option[JobProgress => Unit]): String = {
     val id = s"job-${counter.incrementAndGet()}"
     val path = s"$cacheDir/$id.parquet"
-    val job = Job(id, name, path, Queued, priority)
+    val schema = asNullable(df.schema).asInstanceOf[StructType]
+    val job = Job(id, name, path, schema, Queued, priority)
     jobs.put(id, job)
     job.status = Running
     val sc = df.sparkSession.sparkContext
@@ -107,10 +113,23 @@ object Jobs {
   def failureReason(id: String): Option[String] =
     Option(jobs.get(id)).flatMap(_.failureReason)
 
+  /** A succeeded job's cached result, read with the schema recorded at
+    * submit — no footer-inference job. A missing cache (cleared, deleted)
+    * fails the read. */
   def results(spark: SparkSession, id: String): DataFrame = {
     val job = Option(jobs.get(id)).getOrElse(throw new NoSuchElementException(s"unknown job $id"))
     require(job.status == Succeeded, s"job $id is ${job.status}")
-    spark.read.parquet(job.resultPath)
+    spark.read.schema(job.schema).parquet(job.resultPath)
+  }
+
+  /** `dt` with every nested field, element and map value nullable — the
+    * schema a file read returns for a written frame. */
+  private def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Await a terminal status (reference await_job_completion; local jobs
@@ -156,10 +175,12 @@ object Jobs {
   }
 
   /** One shared SparkListener routing scheduler events to per-job-group
-    * trackers. The final tick is exactly-once and complete: listener-bus
-    * delivery is ordered, so when the group's last Spark job's JobEnd
-    * arrives (or has already arrived when the writer finishes), every task
-    * event of the group has been counted. */
+    * trackers, added to each live SparkContext on its first tracked submit
+    * (a stopped and recreated context starts with no listeners). The
+    * final tick is exactly-once and complete: listener-bus delivery is
+    * ordered, so when the group's last Spark job's JobEnd arrives (or has
+    * already arrived when the writer finishes), every task event of the
+    * group has been counted. */
   private object Progress {
     final class Tracker(groupId: String, jobId: String, onProgress: JobProgress => Unit) {
       private[Progress] val stages = ConcurrentHashMap.newKeySet[Integer]()
@@ -179,11 +200,17 @@ object Jobs {
     }
 
     private val registry = new ConcurrentHashMap[String, Tracker]()
-    private val installed = new AtomicBoolean(false)
+    // weak: a stopped context must stay collectable
+    private var installedOn = new WeakReference[SparkContext](null)
 
-    def register(sc: org.apache.spark.SparkContext, groupId: String, jobId: String,
+    def register(sc: SparkContext, groupId: String, jobId: String,
         onProgress: JobProgress => Unit): Tracker = {
-      if (installed.compareAndSet(false, true)) sc.addSparkListener(listener)
+      synchronized {
+        if (installedOn.get ne sc) {
+          sc.addSparkListener(listener)
+          installedOn = new WeakReference(sc)
+        }
+      }
       val t = new Tracker(groupId, jobId, onProgress)
       registry.put(groupId, t)
       t

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A model in graft is a pure columnar transform prompt→output.
   *
@@ -28,6 +29,14 @@ trait Model extends Serializable {
   /** Optional per-row confidence in [0,1] — surfaces as the reference's
     * `confidence_score` results column when defined. */
   def confidence(prompt: Column): Option[Column] = None
+
+  /** Schema of the JSON object [[generate]] emits, when its shape is fixed
+    * (the reference's `output_schema`, sutro/sdk.py:465). [[Infer.infer]]
+    * carries it on the output column, so results unpack against it with
+    * no data probe. It must equal what `spark.read.json` infers from the
+    * output: fields in name order, every field nullable, numbers as long
+    * or double. None when the output is free text. */
+  def outputSchema: Option[StructType] = None
 }
 
 /** Echoes the prompt back, truncated to `maxChars` — the identity model used
@@ -61,6 +70,8 @@ case class KeywordClassifier(classes: Seq[String], fallback: String = "other") e
     classes.foldRight(lit(fallback): Column) { (c, acc) =>
       when(contains(lower(prompt), lit(c)), lit(c)).otherwise(acc)
     }
+  override def outputSchema: Option[StructType] = Some(StructType(Seq(
+    StructField("classification", StringType), StructField("scratchpad", StringType))))
   /** High confidence on a keyword hit, low on fallback. */
   override def confidence(prompt: Column): Option[Column] =
     Some(when(classification(prompt) === fallback, lit(0.5)).otherwise(lit(0.9)))
@@ -74,6 +85,8 @@ case class JudgeScorer(lo: Int = 0, hi: Int = 10) extends Model {
     concat(lit("{\"score\":"), score(prompt).cast("string"), lit("}"))
   def score(prompt: Column): Column =
     lit(lo) + pmod(length(prompt), lit(hi - lo + 1))
+  override def outputSchema: Option[StructType] =
+    Some(StructType(Seq(StructField("score", LongType))))
 }
 
 /** Deterministic feature-hash embedder (sutro/templates/embed.py:9): tokens

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, Metadata, MetadataBuilder, StringType, StructType}
 
 /** Result-shaping semantics of the reference's `get_job_results`
   * (sutro/sdk.py:1131): structured-output JSON unpacking into columns,
@@ -9,46 +10,50 @@ import org.apache.spark.sql.functions._
   */
 object Results {
 
+  /** Column-metadata key carrying a declared structured-output schema (as
+    * `StructType.json`). [[Infer.infer]] sets it from [[Model.outputSchema]];
+    * metadata survives `select`, joins and the job cache's parquet round
+    * trip, so readback knows the schema without looking at the data. */
+  val OutputSchemaKey = "graft.output_schema"
+
+  /** Metadata declaring `schema` as a column's structured-output schema. An
+    * empty schema declares a column that holds no JSON object. */
+  def outputSchemaMetadata(schema: StructType): Metadata =
+    new MetadataBuilder().putString(OutputSchemaKey, schema.json).build()
+
   /** Unpack a JSON-string output column into one column per top-level field
     * (reference `unpack_json`, sutro/sdk.py:1283).
     *
-    * Schema is inferred from the data (a 1-row sample job, mirroring the
-    * reference's first-row `json.loads` probe) unless the caller provides
-    * field names via a known schema. If the first row is not valid JSON the
-    * frame is returned unchanged. Raises on field/column collisions, like
-    * the reference.
+    * The schema comes, in order, from:
+    *  - the column's declared schema ([[OutputSchemaKey]] metadata);
+    *  - nothing, when the column is neither string nor binary: a cast int,
+    *    array, struct or map is never a JSON object, so the frame is
+    *    returned unchanged. (One corner differs from probing: an
+    *    array<string> whose elements are JSON objects casts to a JSON
+    *    array, which the probe would have unpacked.);
+    *  - a 1-row sample job, mirroring the reference's first-row
+    *    `json.loads` probe. If that row is not a JSON object the frame is
+    *    returned unchanged.
+    * Only the probe runs a Spark job. Raises on field/column collisions,
+    * like the reference.
     */
   def unpackJson(df: DataFrame, outputColumn: String = "inference_result"): DataFrame = {
-    val spark = df.sparkSession
-    val sample: Dataset[String] = {
-      import spark.implicits._
-      df.select(col(outputColumn).cast("string")).na.drop().limit(1).as[String]
+    val schema = df.schema.fields.find(_.name == outputColumn) match {
+      case Some(f) if f.metadata.contains(OutputSchemaKey) =>
+        DataType.fromJson(f.metadata.getString(OutputSchemaKey)).asInstanceOf[StructType]
+      case Some(f) if !(f.dataType.isInstanceOf[StringType] || f.dataType == BinaryType) =>
+        return df
+      case _ => probeSchema(df, outputColumn)
     }
-    val parsed = spark.read.json(sample)
-    val fields = parsed.schema.fields.map(_.name)
-    if (fields.isEmpty || parsed.schema.fields.exists(_.name == "_corrupt_record"))
-      return df
-
-    val conflicting = fields.toSet.intersect(df.columns.toSet - outputColumn).toSeq.sorted
-    if (conflicting.nonEmpty)
-      throw new IllegalArgumentException(
-        "Cannot unpack structured output fields that conflict with existing result columns: " +
-          conflicting.mkString(", ") + ". Set unpack_json=False to preserve the metadata and raw structured output.")
-
-    val schema = parsed.schema
-    val unpacked = df
-      .withColumn("__parsed", from_json(col(outputColumn).cast("string"), schema))
-    val withFields = fields.foldLeft(unpacked) { (d, f) =>
-      d.withColumn(f, col(s"__parsed.$f"))
-    }
-    val flat = withFields.drop("__parsed").drop(outputColumn)
+    if (schema.isEmpty) return df
+    val flat = unpackJsonWithSchema(df, schema, outputColumn)
 
     // Reasoning-model outputs nest the real payload one level down:
     // {content: {...}, reasoning_content: ...} — unpack content's fields
     // and drop the wrapper (reference: sutro/sdk.py:1313).
-    if (fields.sorted.toSeq == Seq("content", "reasoning_content")) {
+    if (schema.fieldNames.sorted.toSeq == Seq("content", "reasoning_content")) {
       flat.schema("content").dataType match {
-        case s: org.apache.spark.sql.types.StructType =>
+        case s: StructType =>
           val inner = s.fields.map(_.name)
           inner.foldLeft(flat) { (d, f) => d.withColumn(f, col(s"content.$f")) }
             .drop("content")
@@ -57,14 +62,28 @@ object Results {
     } else flat
   }
 
+  /** The schema `spark.read.json` infers from the first non-null value;
+    * empty when that value is not a JSON object. */
+  private def probeSchema(df: DataFrame, outputColumn: String): StructType = {
+    val spark = df.sparkSession
+    val sample: Dataset[String] = {
+      import spark.implicits._
+      df.select(col(outputColumn).cast("string")).na.drop().limit(1).as[String]
+    }
+    val parsed = spark.read.json(sample).schema
+    if (parsed.fieldNames.contains("_corrupt_record")) new StructType() else parsed
+  }
+
   /** Unpack with a caller-provided schema (the `output_schema` analog,
     * reference normalize_output_schema, sutro/common.py:170) — no data
-    * probe, collision checks as in [[unpackJson]]. */
+    * probe. The body [[unpackJson]] shares: reject field/column
+    * collisions, parse the output against `schema`, append one column per
+    * field, drop the raw output column. */
   def unpackJsonWithSchema(
       df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       outputColumn: String = "inference_result"): DataFrame = {
-    val fields = schema.fields.map(_.name)
+    val fields = schema.fieldNames
     val conflicting = fields.toSet.intersect(df.columns.toSet - outputColumn).toSeq.sorted
     if (conflicting.nonEmpty)
       throw new IllegalArgumentException(

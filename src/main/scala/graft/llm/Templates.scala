@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's template mixins re-expressed as DataFrame transforms:
   * classify (sutro/templates/classification.py:12), score
@@ -12,7 +13,9 @@ object Templates {
 
   /** Classification template: run the classifier model, unpack the
     * structured {scratchpad, classification} output, optionally keep the
-    * scratchpad (reference include_scratchpad). */
+    * scratchpad (reference include_scratchpad). The classifier declares
+    * its output schema, so the unpack runs no job; the final label column
+    * declares an empty schema, so reading it back unpacks nothing. */
   def classify(
       df: DataFrame,
       classes: Seq[String],
@@ -24,6 +27,7 @@ object Templates {
     val unpacked = Results.unpackJson(inferred, outputColumn)
     if (includeScratchpad) unpacked
     else unpacked.withColumnRenamed("classification", outputColumn).drop("scratchpad")
+      .withMetadata(outputColumn, Results.outputSchemaMetadata(new StructType()))
   }
 
   /** Judge-score template: deterministic score in [lo, hi] per row. */

@@ -1,8 +1,10 @@
 package graft
 
-import graft.llm.Jobs
+import graft.llm.{Infer, JudgeScorer, Jobs, Results, Templates}
 import graft.io.Datasets
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
 
 /** Job lifecycle + dataset registry round trips (reference: sutro/sdk.py
   * jobs and datasets APIs, ~/.sutro parquet result cache). */
@@ -16,6 +18,69 @@ class JobsDatasetsSpec extends SparkSpec {
     val back = Jobs.results(spark, id).orderBy("id").as[(Long, String)].collect()
     assert(back.toSeq === Seq((1L, "a"), (2L, "b")))
     assert(Jobs.list().exists(_.id === id))
+  }
+
+  /** (kind, frame, output column) for every built-in template. */
+  private def templateFrames: Seq[(String, DataFrame, String)] = {
+    val docs = Seq((1L, "this mentions join things"), (2L, "a window function story"),
+      (3L, "nothing relevant here")).toDF("doc_id", "text")
+    Seq(
+      ("infer_structured", Infer.infer(docs, JudgeScorer(0, 10), Seq("text")), "inference_result"),
+      ("classify", Templates.classify(docs, Seq("join", "window"), Seq("text"),
+        outputColumn = "classification_result"), "classification_result"),
+      ("classify_scratchpad", Templates.classify(docs, Seq("join"), Seq("text"),
+        includeScratchpad = true), "inference_result"),
+      ("score", Templates.score(docs, Seq("text"), Seq("clarity"), range = (1, 5)), "score"),
+      ("embed", Templates.embed(docs, Seq("text"), outputColumn = "embedding", dim = 8), "embedding"),
+      ("rank", Templates.rank(docs.select(col("doc_id"), col("text").as("a"), lit("bb").as("b")),
+        Seq("a", "b")), "ranking"))
+  }
+
+  test("jobs: results read with the recorded schema equal a schema-inferring parquet read") {
+    for ((kind, frame, _) <- templateFrames) {
+      val id = Jobs.submit(frame, Some(kind))
+      val path = Jobs.list().find(_.id == id).get.resultPath
+      val inferred = spark.read.parquet(path)
+      // StructField equality covers names, order, types, nullability, metadata
+      assert(Jobs.results(spark, id).schema === inferred.schema, kind)
+      assert(Jobs.results(spark, id).orderBy("doc_id").collect().toSeq ===
+        inferred.orderBy("doc_id").collect().toSeq, kind)
+      if (kind == "infer_structured")
+        assert(inferred.schema("inference_result").metadata.contains(Results.OutputSchemaKey))
+    }
+  }
+
+  test("jobs: get_job_results runs no Spark job for any built-in template, same rows as probing") {
+    val g = Graft(spark)
+    for ((kind, frame, out) <- templateFrames) {
+      val id = Jobs.submit(frame, Some(kind))
+      val (res, jobs) = sparkJobsDuring(g.jobResults(id, outputColumn = out))
+      assert(jobs === 0, kind)
+      // the readback before declared schemas: inferring read, probing unpack
+      val path = Jobs.list().find(_.id == id).get.resultPath
+      val raw = spark.read.parquet(path)
+      val probed =
+        if (!raw.columns.contains(out)) raw
+        else Results.unpackJson(Results.orderColumns(raw.withMetadata(out, Metadata.empty), out), out)
+      assert(res.columns.toSeq === probed.columns.toSeq, kind)
+      assert(res.orderBy("doc_id").collect().toSeq === probed.orderBy("doc_id").collect().toSeq, kind)
+    }
+  }
+
+  test("jobs: results of a cleared cache throw instead of reading an empty frame") {
+    val prior = sys.props.get("graft.jobs.dir")
+    sys.props("graft.jobs.dir") = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    try {
+      val id = Jobs.submit(Seq((1L, "a")).toDF("id", "text"))
+      assert(Jobs.results(spark, id).count() === 1)
+      Cli.run(Graft(spark), List("cache", "clear"))
+      val e = intercept[org.apache.spark.sql.AnalysisException](Jobs.results(spark, id))
+      assert(e.getMessage.contains(id))
+      intercept[org.apache.spark.sql.AnalysisException](Graft(spark).jobResults(id))
+    } finally prior match {
+      case Some(d) => sys.props("graft.jobs.dir") = d
+      case None => sys.props -= "graft.jobs.dir"
+    }
   }
 
   test("jobs: unknown id -> Failed status; cancel on terminal job is a no-op") {

@@ -1,7 +1,9 @@
 package graft
 
 import graft.llm._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Mirrors the reference's results-shaping tests: unpack_json field
   * explosion, collision detection (tests/test_id_column.py), column
@@ -28,6 +30,80 @@ class ResultsSpec extends SparkSpec {
     val df = Seq((1L, "plain text")).toDF("id", "inference_result")
     val out = Results.unpackJson(df)
     assert(out.columns.toSeq === Seq("id", "inference_result"))
+  }
+
+  /** The probe's view of a column: the schema `spark.read.json` infers
+    * from its first non-null value cast to string. */
+  private def probed(df: DataFrame, c: String): StructType =
+    spark.read.json(df.select(col(c).cast("string")).na.drop().limit(1).as[String]).schema
+
+  private def docs = Seq(
+    (1L, "a join of two tables"), (2L, "windowed stream"), (3L, "nothing here at all"))
+    .toDF("doc_id", "text")
+
+  test("unpackJson: a declared schema unpacks with no Spark job, same rows as the probe") {
+    val inferred = Infer.infer(docs, JudgeScorer(0, 10), Seq("text"))
+    assert(inferred.schema("inference_result").metadata.contains(Results.OutputSchemaKey))
+    val (out, jobs) = sparkJobsDuring(Results.unpackJson(inferred))
+    assert(jobs === 0)
+    // the same frame with the declaration stripped goes through the probe
+    val undeclared = inferred.withMetadata("inference_result", Metadata.empty)
+    val (viaProbe, probeJobs) = sparkJobsDuring(Results.unpackJson(undeclared))
+    assert(probeJobs > 0)
+    assert(out.schema === viaProbe.schema)
+    assert(out.orderBy("doc_id").collect().toSeq === viaProbe.orderBy("doc_id").collect().toSeq)
+    // the declaration survives a select and a join
+    val joined = Results.withOriginalDf(docs.select("doc_id"), inferred.select("doc_id", "inference_result"),
+      "doc_id")
+    assert(sparkJobsDuring(Results.unpackJson(joined))._2 === 0)
+  }
+
+  test("unpackJson: an undeclared JSON string column still probes and unpacks as before") {
+    val df = Seq((1L, """{"score":7,"label":"good"}""")).toDF("id", "inference_result")
+    val (out, jobs) = sparkJobsDuring(Results.unpackJson(df))
+    assert(jobs > 0)
+    assert(out.columns.toSeq === Seq("id", "label", "score"))
+    assert(out.as[(Long, String, Long)].collect().toSeq === Seq((1L, "good", 7L)))
+  }
+
+  test("unpackJson: an empty declared schema returns the frame unchanged with no job") {
+    val df = Seq((1L, """{"score":7}""")).toDF("id", "inference_result")
+      .withMetadata("inference_result", Results.outputSchemaMetadata(new StructType()))
+    val (out, jobs) = sparkJobsDuring(Results.unpackJson(df))
+    assert(jobs === 0 && (out eq df))
+  }
+
+  test("unpackJson: int, array and struct columns come back unchanged with no job, as probed") {
+    val df = Seq((1L, 7, Seq(0.5f, -0.5f), Seq("a", "b"), ("x", 2)))
+      .toDF("id", "n", "vec", "labels", "pair")
+    for (c <- Seq("n", "vec", "labels", "pair")) {
+      val (out, jobs) = sparkJobsDuring(Results.unpackJson(df, c))
+      assert(jobs === 0, c)
+      assert(out eq df, c)
+      // the probe found no JSON object in these either, so it returned df too
+      val p = probed(df, c)
+      assert(p.isEmpty || p.fieldNames.contains("_corrupt_record"), s"$c probed as $p")
+    }
+  }
+
+  test("unpackJson: array<string> of JSON objects is the one corner the probe unpacked") {
+    // cast to string this column reads `[{"a":1}, {"a":2}]`, a JSON array of
+    // objects, so the probe found field `a`; by type it is not a JSON
+    // object, and unpackJson now returns it unchanged
+    val df = Seq((1L, Seq("""{"a":1}""", """{"a":2}"""))).toDF("id", "inference_result")
+    assert(probed(df, "inference_result").fieldNames.toSeq === Seq("a"))
+    val (out, jobs) = sparkJobsDuring(Results.unpackJson(df))
+    assert(jobs === 0 && (out eq df))
+  }
+
+  test("outputSchema: each declared schema is what spark.read.json infers from the output") {
+    val declared = Seq(KeywordClassifier(Seq("join", "window")), JudgeScorer(0, 10))
+    for (m <- declared) {
+      val out = docs.select(m.generate(col("text"))).as[String]
+      assert(m.outputSchema === Some(spark.read.json(out).schema), m.name)
+    }
+    for (m <- Seq(EchoModel(), TemplateModel("t: "), HashEmbedder()))
+      assert(m.outputSchema.isEmpty, m.name)
   }
 
   test("orderColumns: metadata first, output, then diagnostics (sdk.py:1251)") {

@@ -197,6 +197,18 @@ class StreamingSpec extends SparkSpec {
     assert(s.sameElements(b))
   }
 
+  test("GRAFT_STATE_STORE: rocksdb/hdfs/heap in any case; unset is RocksDB; anything else throws") {
+    assert(GraftSession.stateStoreIsRocksDb(None))
+    for (v <- Seq("rocksdb", "RocksDB", "ROCKSDB"))
+      assert(GraftSession.stateStoreIsRocksDb(Some(v)), v)
+    for (v <- Seq("hdfs", "HDFS", "heap", "Heap"))
+      assert(!GraftSession.stateStoreIsRocksDb(Some(v)), v)
+    for (v <- Seq("hdsf", "rocks", "memory", "", " hdfs")) {
+      val e = intercept[IllegalArgumentException](GraftSession.stateStoreIsRocksDb(Some(v)))
+      assert(e.getMessage.contains("GRAFT_STATE_STORE"), v)
+    }
+  }
+
   test("heap-backed state store: sessionization identical to the RocksDB default") {
     // the state store provider must be a pure swap: same query, same rows.
     // RocksDB is the session default since round 14 (GraftSession), so the

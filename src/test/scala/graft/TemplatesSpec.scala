@@ -1,7 +1,8 @@
 package graft
 
-import graft.llm.Templates
+import graft.llm.{Results, Templates}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 class TemplatesSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +23,22 @@ class TemplatesSpec extends SparkSpec {
   test("classify: includeScratchpad keeps both structured fields") {
     val out = Templates.classify(docs, Seq("join"), Seq("text"), includeScratchpad = true)
     assert(out.columns.contains("scratchpad") && out.columns.contains("classification"))
+  }
+
+  test("templates build their frames with no Spark job; the classify label declares no JSON") {
+    val builds = Seq(
+      "classify" -> (() => Templates.classify(docs, Seq("join", "window"), Seq("text"))),
+      "classify_scratchpad" ->
+        (() => Templates.classify(docs, Seq("join"), Seq("text"), includeScratchpad = true)),
+      "score" -> (() => Templates.score(docs, Seq("text"), Seq("clarity"))),
+      "embed" -> (() => Templates.embed(docs, Seq("text"))),
+      "rank" -> (() => Templates.rank(docs, Seq("text", "doc_id"))))
+    for ((kind, build) <- builds) {
+      val (_, jobs) = sparkJobsDuring(build())
+      assert(jobs === 0, kind)
+    }
+    val label = Templates.classify(docs, Seq("join"), Seq("text")).schema("inference_result")
+    assert(label.metadata.getString(Results.OutputSchemaKey) === new StructType().json)
   }
 
   test("score: values stay within the requested range") {
